@@ -26,6 +26,7 @@ import os
 import tempfile
 import time
 from dataclasses import dataclass, field
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import types as T
@@ -301,29 +302,34 @@ class SnapshotLog:
         appends. ``expire_snapshots`` keeps tagged snapshots reachable only
         if they fall in the retained window, same as Iceberg's retention.
         """
-        with _commit_lock(self.table_dir):
-            on_disk = SnapshotLog(self.table_dir, self.branch).load()
+        with self.rewrite() as on_disk:
             if snapshot_id not in [s.snapshot_id for s in on_disk.snapshots]:
                 raise KeyError(f"snapshot {snapshot_id} not found in {self.path}")
             on_disk.refs[name] = snapshot_id
-            on_disk._write(expected_len=None)
-            self.load()
 
     def drop_ref(self, name: str) -> None:
-        with _commit_lock(self.table_dir):
-            on_disk = SnapshotLog(self.table_dir, self.branch).load()
+        with self.rewrite() as on_disk:
             on_disk.refs.pop(name, None)
-            on_disk._write(expected_len=None)
-            self.load()
 
     def set_properties(self, props: dict[str, str]) -> None:
         """ALTER TABLE SET TBLPROPERTIES — atomic, metadata-only (same lock
         + rename as commits). Used e.g. to enable the change-data feed on an
         existing table; snapshots already committed are unaffected."""
+        with self.rewrite() as on_disk:
+            on_disk.properties.update({k: str(v) for k, v in props.items()})
+
+    @contextlib.contextmanager
+    def rewrite(self) -> Iterator["SnapshotLog"]:
+        """Read-modify-write of the whole log under the commit lock.
+
+        Yields a freshly loaded copy of the log on disk, never this
+        handle's cached state, so a commit that landed after this handle
+        last loaded is kept. The copy is written back when the block exits
+        without an exception, and this handle is reloaded."""
         with _commit_lock(self.table_dir):
             on_disk = SnapshotLog(self.table_dir, self.branch).load()
-            on_disk.properties.update({k: str(v) for k, v in props.items()})
-            on_disk._write(expected_len=None)
+            yield on_disk
+            on_disk._write()
             self.load()
 
     # ------------------------------------------------------------ commits --
@@ -347,7 +353,7 @@ class SnapshotLog:
             )
         ]
         os.makedirs(self.table_dir, exist_ok=True)
-        self._write(expected_len=None)
+        self._write()
 
     # ops safe to auto-retry after refreshing to the winner's state: they
     # only ADD files, so their outcome doesn't depend on the state they were
@@ -426,7 +432,7 @@ class SnapshotLog:
                         summary=dict(summary or {}),
                     )
                     self.snapshots.append(snap)
-                    self._write(expected_len=len(self.snapshots))
+                    self._write()
                     return snap
             # conflict: another writer advanced the log since we loaded it
             retryable = operation in self.COMMUTATIVE_OPS or (
@@ -450,7 +456,7 @@ class SnapshotLog:
             self.properties = on_disk.properties
             self.snapshots = on_disk.snapshots
 
-    def _write(self, expected_len: int | None) -> None:
+    def _write(self) -> None:
         payload = {
             # v2: partition dicts are stored percent-DECODED (keys and
             # values); see the load() migration note

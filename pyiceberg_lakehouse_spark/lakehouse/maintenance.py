@@ -642,88 +642,89 @@ def expire_snapshots(table: LakehouseTable, keep_last: int = 1) -> list[str]:
             f"table has branches {table.branches()}; expire after landing/"
             "dropping them"
         )
-    log = table.log
-    # the cut point: everything before it squashes into the base snapshot.
-    # Tagged snapshots pull the cut back so they (and everything after
-    # them, which their replay does not need but monotone history keeps
-    # the squash simple) survive.
-    keep_from = len(log.snapshots) - keep_last
-    id_pos = {s.snapshot_id: i for i, s in enumerate(log.snapshots)}
-    for sid in log.refs.values():
-        if sid in id_pos:
-            keep_from = min(keep_from, id_pos[sid])
-    if keep_from <= 0:
-        return []
-    # files reachable from any retained snapshot's replayed state
-    retained_ids = [s.snapshot_id for s in log.snapshots[keep_from:]]
-    reachable: set[str] = set()
-    for sid in retained_ids:
-        reachable.update(f["path"] for f in log.live_files(sid))
-    # every file ever added — including equality-delete files, which
-    # otherwise accumulate forever once overwrite/expiry drops them
-    all_paths = {f["path"] for s in log.snapshots for f in s.added_files}
-    all_paths |= {d["path"] for s in log.snapshots for d in s.added_deletes}
-    for sid in retained_ids:
-        reachable.update(d["path"] for d in log.live_deletes(sid))
-    orphaned = sorted(all_paths - reachable)
-    # squash: keep a synthetic base snapshot carrying the oldest retained
-    # state — including the merge-on-read deletes in effect there, so
-    # deleted keys cannot resurrect after history is dropped
-    base_files = log.live_files(retained_ids[0])
-    base_deletes = log.live_deletes(retained_ids[0])
-    base = log.snapshots[keep_from]
-    # rename history must survive expiry: retained files keep their original
-    # added_in, so reading them still depends on renames recorded in the
-    # snapshots being dropped — stash those events on the base snapshot
-    dropped_renames = []
-    for s in log.snapshots[:keep_from]:
-        if "rename_column" in s.summary:
-            dropped_renames.append(
-                {"snapshot_id": s.snapshot_id, **s.summary["rename_column"]}
-            )
-        dropped_renames.extend(s.summary.get("rename_history", []))
-    if dropped_renames:
-        base.summary["rename_history"] = dropped_renames + base.summary.get(
-            "rename_history", []
-        )
-    # same for add/drop column events: the re-add null guard needs them
-    dropped_cols = []
-    for s in log.snapshots[:keep_from]:
-        for op in ("add", "drop"):
-            key = f"{op}_column"
-            if key in s.summary:
-                dropped_cols.append(
-                    {"snapshot_id": s.snapshot_id, "op": op, "name": s.summary[key]}
+    # the squash rewrites the whole log: run it on the log as it is on
+    # disk, or a commit that landed after this handle last loaded is lost
+    with table.log.rewrite() as log:
+        # the cut point: everything before it squashes into the base snapshot.
+        # Tagged snapshots pull the cut back so they (and everything after
+        # them, which their replay does not need but monotone history keeps
+        # the squash simple) survive.
+        keep_from = len(log.snapshots) - keep_last
+        id_pos = {s.snapshot_id: i for i, s in enumerate(log.snapshots)}
+        for sid in log.refs.values():
+            if sid in id_pos:
+                keep_from = min(keep_from, id_pos[sid])
+        if keep_from <= 0:
+            return []
+        # files reachable from any retained snapshot's replayed state
+        retained_ids = [s.snapshot_id for s in log.snapshots[keep_from:]]
+        reachable: set[str] = set()
+        for sid in retained_ids:
+            reachable.update(f["path"] for f in log.live_files(sid))
+        # every file ever added — including equality-delete files, which
+        # otherwise accumulate forever once overwrite/expiry drops them
+        all_paths = {f["path"] for s in log.snapshots for f in s.added_files}
+        all_paths |= {d["path"] for s in log.snapshots for d in s.added_deletes}
+        for sid in retained_ids:
+            reachable.update(d["path"] for d in log.live_deletes(sid))
+        orphaned = sorted(all_paths - reachable)
+        # squash: keep a synthetic base snapshot carrying the oldest retained
+        # state — including the merge-on-read deletes in effect there, so
+        # deleted keys cannot resurrect after history is dropped
+        base_files = log.live_files(retained_ids[0])
+        base_deletes = log.live_deletes(retained_ids[0])
+        base = log.snapshots[keep_from]
+        # rename history must survive expiry: retained files keep their original
+        # added_in, so reading them still depends on renames recorded in the
+        # snapshots being dropped — stash those events on the base snapshot
+        dropped_renames = []
+        for s in log.snapshots[:keep_from]:
+            if "rename_column" in s.summary:
+                dropped_renames.append(
+                    {"snapshot_id": s.snapshot_id, **s.summary["rename_column"]}
                 )
-        dropped_cols.extend(s.summary.get("column_history", []))
-    if dropped_cols:
-        base.summary["column_history"] = dropped_cols + base.summary.get(
-            "column_history", []
-        )
-    # ANN-index epoch must survive expiry too: refresh_ann_indexes keys off
-    # the last index commit's id, and the squash may drop that snapshot
-    dropped_epochs = [
-        s.snapshot_id
-        for s in log.snapshots[:keep_from]
-        if s.summary.get("op") in _INDEX_OPS
-    ] + [
-        s.summary["ann_index_epoch"]
-        for s in log.snapshots[:keep_from]
-        if "ann_index_epoch" in s.summary
-    ]
-    if dropped_epochs:
-        base.summary["ann_index_epoch"] = max(
-            [*dropped_epochs, base.summary.get("ann_index_epoch", 0)]
-        )
-    base.added_files = base_files
-    base.removed_paths = []
-    existing = {d["path"] for d in base.added_deletes}
-    base.added_deletes = base.added_deletes + [
-        d for d in base_deletes if d["path"] not in existing
-    ]
-    base.operation = "overwrite" if base.operation != "create" else "create"
-    log.snapshots = log.snapshots[keep_from:]
-    log._write(expected_len=None)
+            dropped_renames.extend(s.summary.get("rename_history", []))
+        if dropped_renames:
+            base.summary["rename_history"] = dropped_renames + base.summary.get(
+                "rename_history", []
+            )
+        # same for add/drop column events: the re-add null guard needs them
+        dropped_cols = []
+        for s in log.snapshots[:keep_from]:
+            for op in ("add", "drop"):
+                key = f"{op}_column"
+                if key in s.summary:
+                    dropped_cols.append(
+                        {"snapshot_id": s.snapshot_id, "op": op, "name": s.summary[key]}
+                    )
+            dropped_cols.extend(s.summary.get("column_history", []))
+        if dropped_cols:
+            base.summary["column_history"] = dropped_cols + base.summary.get(
+                "column_history", []
+            )
+        # ANN-index epoch must survive expiry too: refresh_ann_indexes keys off
+        # the last index commit's id, and the squash may drop that snapshot
+        dropped_epochs = [
+            s.snapshot_id
+            for s in log.snapshots[:keep_from]
+            if s.summary.get("op") in _INDEX_OPS
+        ] + [
+            s.summary["ann_index_epoch"]
+            for s in log.snapshots[:keep_from]
+            if "ann_index_epoch" in s.summary
+        ]
+        if dropped_epochs:
+            base.summary["ann_index_epoch"] = max(
+                [*dropped_epochs, base.summary.get("ann_index_epoch", 0)]
+            )
+        base.added_files = base_files
+        base.removed_paths = []
+        existing = {d["path"] for d in base.added_deletes}
+        base.added_deletes = base.added_deletes + [
+            d for d in base_deletes if d["path"] not in existing
+        ]
+        base.operation = "overwrite" if base.operation != "create" else "create"
+        log.snapshots = log.snapshots[keep_from:]
     for p in orphaned:
         if os.path.exists(p):
             os.unlink(p)
@@ -1449,50 +1450,51 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
                 del_replacements[path] = reps_
                 del_matched.add(_canon(path))
 
-    # remap every snapshot in place, preserving ids and sequencing
-    dropped = 0
-    for s in log.snapshots:
-        new_files: list[dict] = []
-        for f in s.added_files:
-            if f["path"] not in replacements:
-                new_files.append(f)
-                continue
-            reps = replacements[f["path"]]
-            if not reps:
-                dropped += 1
-            for r in reps:
-                new_files.append({**r, "added_in": f.get("added_in", s.snapshot_id)})
-        s.added_files = new_files
-        s.removed_paths = [
-            np
-            for p in s.removed_paths
-            for np in (
-                [r["path"] for r in replacements[p]]
-                if p in replacements
-                else [p]
-            )
-        ]
-        if s.summary.get("change-data-files"):
-            s.summary["change-data-files"] = [
-                nf
-                for f in s.summary["change-data-files"]
-                for nf in (
-                    cdf_replacements[f["path"]]
-                    if f["path"] in cdf_matched
-                    else [f]
-                )
-            ]
-        if s.added_deletes:
-            s.added_deletes = [
-                {**d, "path": np}
-                for d in s.added_deletes
+    # remap every snapshot in place, preserving ids and sequencing, on the
+    # log as it is on disk so no concurrent commit is lost
+    with table.log.rewrite() as log:
+        dropped = 0
+        for s in log.snapshots:
+            new_files: list[dict] = []
+            for f in s.added_files:
+                if f["path"] not in replacements:
+                    new_files.append(f)
+                    continue
+                reps = replacements[f["path"]]
+                if not reps:
+                    dropped += 1
+                for r in reps:
+                    new_files.append({**r, "added_in": f.get("added_in", s.snapshot_id)})
+            s.added_files = new_files
+            s.removed_paths = [
+                np
+                for p in s.removed_paths
                 for np in (
-                    del_replacements[d["path"]]
-                    if d["path"] in del_matched
-                    else [d["path"]]
+                    [r["path"] for r in replacements[p]]
+                    if p in replacements
+                    else [p]
                 )
             ]
-    log._write(expected_len=None)
+            if s.summary.get("change-data-files"):
+                s.summary["change-data-files"] = [
+                    nf
+                    for f in s.summary["change-data-files"]
+                    for nf in (
+                        cdf_replacements[f["path"]]
+                        if f["path"] in cdf_matched
+                        else [f]
+                    )
+                ]
+            if s.added_deletes:
+                s.added_deletes = [
+                    {**d, "path": np}
+                    for d in s.added_deletes
+                    for np in (
+                        del_replacements[d["path"]]
+                        if d["path"] in del_matched
+                        else [d["path"]]
+                    )
+                ]
     # unlink ONLY bytes this table owns: files outside table_dir may be
     # shared — registered via add_files, or referenced by a shallow clone
     # (or BE a clone's view of its source). The rewritten replacements
@@ -1578,6 +1580,10 @@ def shallow_clone(lh, source: LakehouseTable, identifier: str) -> LakehouseTable
         + [d.get("snapshot_id", 0) for d in deletes]
     )
     if max_seq > snap.snapshot_id:
-        snap.snapshot_id = max_seq
-        clone.log._write(expected_len=None)
+        with clone.log.rewrite() as log:
+            if log.current_snapshot_id() != snap.snapshot_id:
+                raise RuntimeError(
+                    f"concurrent commit on the new clone {clone.table_dir}"
+                )
+            log.snapshots[-1].snapshot_id = max_seq
     return clone

@@ -39,7 +39,6 @@ from pyspark.sql import types as T
 from pyiceberg_lakehouse_spark.lakehouse.log import (
     SnapshotLog,
     Snapshot,
-    _commit_lock,
 )
 from pyiceberg_lakehouse_spark.lakehouse.transforms import (
     PartitionField,
@@ -295,7 +294,7 @@ class Lakehouse:
                         d["path"] = os.path.join(dst_dir, d["path"][len(prefix):])
                     if d.get("kind") == "position":
                         pos_delete_paths.add(d["path"])
-            log._write(expected_len=None)
+            log._write()
         # Position-delete parquet CONTENT stores absolute data-file paths
         # (the scan anti-joins on _metadata.file_path): left at the old
         # prefix they would match nothing and every deleted row would
@@ -379,7 +378,7 @@ class LakehouseTable:
         dst.properties = dict(src.properties)
         dst.snapshots = src.snapshots
         dst.refs = dict(src.refs)
-        dst._write(expected_len=None)
+        dst._write()
         return LakehouseTable(self.spark, self.table_dir, branch=name)
 
     def branches(self) -> list[str]:
@@ -433,8 +432,7 @@ class LakehouseTable:
         one atomic log swap, exactly Git's fast-forward. Diverged histories
         raise; rebase by replaying the branch's operations instead.
         """
-        with _commit_lock(self.table_dir):
-            ours = SnapshotLog(self.table_dir, self.branch).load()
+        with self.log.rewrite() as ours:
             theirs = SnapshotLog(self.table_dir, from_branch).load()
             # prefix equality by full snapshot CONTENT — ids alone are
             # sequential ints, so two diverged histories can share them
@@ -450,8 +448,6 @@ class LakehouseTable:
             ours.properties = dict(theirs.properties)
             ours.snapshots = theirs.snapshots
             ours.refs = dict(theirs.refs)
-            ours._write(expected_len=None)
-        self.log.load()
 
     # ---------------------------------------------------------- metadata --
 
@@ -960,7 +956,9 @@ class LakehouseTable:
         touched = prune_files(files, stat_filter) if stat_filter else files
         if not touched:
             return self._commit("replace", [], summary={"op": "delete_where"})
-        rows = self._read_files(touched)
+        # the rewritten files are newer than every pending merge-on-read
+        # delete, so those deletes must be applied here or their rows return
+        rows = self._read_files_with_deletes(touched)
         # SQL DELETE removes rows where the predicate is TRUE; a NULL
         # predicate keeps the row (filter(~pred) would silently drop it)
         hit = F.coalesce(predicate, F.lit(False))
@@ -1017,7 +1015,7 @@ class LakehouseTable:
         touched = prune_files(files, stat_filter) if stat_filter else files
         if not touched:
             return self._commit("replace", [], summary={"op": "update_where"})
-        rows = self._read_files(touched)
+        rows = self._read_files_with_deletes(touched)  # see delete_where
         cols = []
         for name in schema.fieldNames():
             if name in assignments:

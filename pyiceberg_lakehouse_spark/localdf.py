@@ -16,13 +16,21 @@ one partition while genuinely parallel work lists (file paths fanned out
 to executors) keep one row per slice exactly as before. Row order is
 preserved either way (``parallelize`` keeps list order across slices), so
 results are byte-identical to the stock path.
+
+The per-document map stage lives here too: ``spread_ids`` fans a small
+id frame out across the cores, and ``map_docs`` runs one Python function
+per document over Arrow batches.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from collections.abc import Callable, Iterable, Iterator
+from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def local_rows_df(
@@ -57,36 +65,22 @@ def spread_ids(
 ) -> DataFrame:
     """Round-robin a small id-only frame across the session's cores.
 
-    The planted-fixture multimodal/crawl queries feed ``mapInPandas``
-    from a filtered scan of the tiny ``documents`` table — at bench
-    scale that scan is a SINGLE input split, so the whole Python-side
-    codec stage (the real cost) ran on one core. Repartitioning the
-    id stream to ``defaultParallelism`` costs a shuffle of a few KB of
-    longs and fans the per-document decode out across the cluster
-    (guide §2.5 input skew: one unsplittable input → repartition right
-    after the read). Scale-adaptive by construction: the target tracks
-    the session's core count, never a constant. Only ever applied to
-    id-only frames — payload-carrying scans keep their native splits
-    so bytes never shuffle (guide §8).
+    Invariants:
 
-    ``sf_dir``/``table`` (r19, VERDICT r18 what's-wrong #5): when the
-    source table's footer row-group count — the real unit of scan
-    parallelism, probed once per process — already reaches the
-    session's core count, the input is splittable and the fan-out is
-    a NO-OP: at production row-group counts ``repartition(cores)``
-    would *shrink* a many-split id scan into core-count giant
-    partitions instead of widening it. Same guard as
-    ``load_table_spread``.
-
-    ``max_width`` (r19, VERDICT r18 what's-wrong #1): cap for LIGHT
-    per-document decodes (~1-3 ms/doc), where interleaved A/Bs show a
-    one-task-per-core fan-out costs more in per-task scheduling than
-    the decode work it spreads (gif_decode / tiff_lzw lost 10-25% at
-    32 cores with the full fan-out, while min(cores, 8) won or tied
-    at both 32 and 8 cores). The cap matches the work, not the
-    machine: it binds only under the unsplittable-fixture regime
-    above — at production row-group counts the guard short-circuits
-    first."""
+    - Only ever applied to id-only frames, so at most a few KB of longs
+      shuffle; payload-carrying scans keep their native splits.
+    - The target width is the session's ``defaultParallelism``, never a
+      constant, so the fan-out tracks the cluster.
+    - When ``sf_dir`` is given and the source ``table``'s footer
+      row-group count (probed once per process) already reaches that
+      width, the input is splittable and the frame comes back
+      unchanged: ``repartition(cores)`` would otherwise shrink a
+      many-split scan into core-count giant partitions.
+    - ``max_width`` caps the width for light per-document work (a few
+      ms per document), where one task per core costs more in
+      scheduling than the work it spreads. It only binds when the
+      row-group guard above has not already returned the input.
+    """
     sc = df.sparkSession.sparkContext
     width = sc.defaultParallelism
     if sf_dir is not None:
@@ -99,3 +93,44 @@ def spread_ids(
     if max_width is not None:
         width = min(width, max_width)
     return df.repartition(width)
+
+
+def map_docs(
+    df: DataFrame,
+    row_fn: Callable[..., Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """Per-document map: ``row_fn(*input_values)`` runs once per input row
+    and yields zero or more output tuples, in ``schema`` field order.
+
+    The input row's values arrive as plain Python objects in ``df``'s
+    column order (``bytes`` for binary, ``int`` for integral, ``None``
+    for NULL). Each Arrow batch of output is built straight from the
+    schema with ``pa.array(column, type=field.type)``, through
+    ``mapInArrow`` and with no pandas step, so:
+
+    - ``None`` is NULL and ``float('nan')`` is NaN, in every column;
+    - a value that does not fit its field's type (an int overflowing
+      ``IntegerType``, a bool in an integral field) raises instead of
+      being wrapped or cast;
+    - a tuple whose length differs from the schema's raises.
+    """
+    arrow_schema = to_arrow_schema(schema)
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            rows = [
+                out
+                for args in zip(*(c.to_pylist() for c in batch.columns))
+                for out in row_fn(*args)
+            ]
+            cols = list(zip(*rows, strict=True)) if rows else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(col, type=field.type)
+                    for col, field in zip(cols, arrow_schema, strict=True)
+                ],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(batches, schema)

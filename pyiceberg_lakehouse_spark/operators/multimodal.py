@@ -2,7 +2,7 @@
 
 Convention: a multimodal asset is a ``binary`` column (``content``) plus a
 struct of metadata (``media``: mime type, byte length, checksum). Decode /
-feature-extraction runs as Arrow-batched ``mapInPandas``.
+feature-extraction runs as Arrow-batched ``map_docs`` (``localdf.py``).
 
 Decode is REAL for four formats that need no third-party codec library —
 BMP (BITMAPINFOHEADER parse -> width/height/bpp) and WAV (RIFF/fmt chunk
@@ -30,13 +30,13 @@ from __future__ import annotations
 
 import hashlib
 import struct as _struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pyiceberg_lakehouse_spark.localdf import map_docs
 
 try:  # runtime availability gate — never a hard dependency
     from PIL import Image as _PILImage  # type: ignore
@@ -275,7 +275,7 @@ def decode_png(payload: bytes):
     Un-filtering is per-scanline: Up is vectorized; Sub is a mod-256
     prefix sum over pixel lanes; Average/Paeth fall back to a per-pixel
     loop (their left term is inherently sequential) — fine for the
-    mapInPandas batch shapes this feeds, where decode runs where the bytes
+    map_docs batch shapes this feeds, where decode runs where the bytes
     live and only typed features shuffle.
     """
     import zlib as _zlib
@@ -631,24 +631,19 @@ def attach_media_assets(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     """
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, mimes = [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
-                p = _asset_params(int(doc_id))
-                mimes.append(p["mime"])
-                if p["mime"] == "image/bmp":
-                    payloads.append(make_bmp(p["width"], p["height"]))
-                elif p["mime"] == "audio/wav":
-                    payloads.append(make_wav(p["rate"], p["n_samples"]))
-                else:
-                    payloads.append(str(txt).encode("utf-8"))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "mime": mimes, "content": payloads}
-            )
+    def row(doc_id, txt):
+        p = _asset_params(doc_id)
+        if p["mime"] == "image/bmp":
+            payload = make_bmp(p["width"], p["height"])
+        elif p["mime"] == "audio/wav":
+            payload = make_wav(p["rate"], p["n_samples"])
+        else:
+            payload = str(txt).encode("utf-8")
+        yield doc_id, p["mime"], payload
 
-    out = src.mapInPandas(
-        batches,
+    out = map_docs(
+        src,
+        row,
         T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -674,35 +669,17 @@ def extract_media_features(df: DataFrame) -> DataFrame:
 
     src = df.select("doc_id", "content", F.col("media.mime").alias("mime"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "mime": pdf["mime"],
-                "n_bytes": pd.Series([len(c) for c in pdf["content"]], dtype="int32"),
-                "width": [],
-                "height": [],
-                "sample_rate": [],
-                "n_samples": [],
-            }
-            for content, mime in zip(pdf["content"], pdf["mime"]):
-                w = h = rate = n = None
-                payload = bytes(content)
-                if mime == "image/bmp":
-                    w, h, _ = decode_bmp(payload)
-                elif mime == "audio/wav":
-                    rate, _, n = decode_wav(payload)
-                elif mime in _PIL_MIMES:
-                    w, h, _ = decode_image_codec(payload)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-            for c in ("width", "height", "sample_rate", "n_samples"):
-                out[c] = pd.Series(out[c], dtype="Int32")
-            yield pd.DataFrame(out)
+    def row(doc_id, payload, mime):
+        w = h = rate = n = None
+        if mime == "image/bmp":
+            w, h, _ = decode_bmp(payload)
+        elif mime == "audio/wav":
+            rate, _, n = decode_wav(payload)
+        elif mime in _PIL_MIMES:
+            w, h, _ = decode_image_codec(payload)
+        yield doc_id, mime, len(payload), w, h, rate, n
 
-    return src.mapInPandas(batches, MEDIA_FEATURE_SCHEMA)
+    return map_docs(src, row, MEDIA_FEATURE_SCHEMA)
 
 
 def encode_bmp(pixels) -> bytes:
@@ -786,77 +763,48 @@ def resize_media(df: DataFrame, factor: int = 2) -> DataFrame:
     synthesizer's parameters. Text rows pass through as NULL features.
 
     At 100 TB this is the canonical shape: decode + transform run where the
-    bytes live (mapInPandas over the scan), only small typed features (or
+    bytes live (map_docs over the scan), only small typed features (or
     the re-encoded, smaller payloads) move downstream.
     """
     import numpy as np
 
     src = df.select("doc_id", "content", F.col("media.mime").alias("mime"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "mime": pdf["mime"],
-                "out_width": [],
-                "out_height": [],
-                "out_sample_rate": [],
-                "out_n_samples": [],
-                "value_sum": [],
-            }
-            for content, mime in zip(pdf["content"], pdf["mime"]):
-                w = h = rate = n = vsum = None
-                payload = bytes(content)
-                if mime == "image/bmp":
-                    small = _bmp_pixels(payload)[::factor, ::factor, :]
-                    reencoded = encode_bmp(small)
-                    w, h, _ = decode_bmp(reencoded)
-                    vsum = int(_bmp_pixels(reencoded).astype(np.int64).sum())
-                elif mime == "audio/wav":
-                    in_rate, _, _ = decode_wav(payload)
-                    small = _wav_samples(payload)[::factor]
-                    reencoded = encode_wav(in_rate // factor, small)
-                    rate, _, n = decode_wav(reencoded)
-                    vsum = int(_wav_samples(reencoded).astype(np.int64).sum())
-                out["out_width"].append(w)
-                out["out_height"].append(h)
-                out["out_sample_rate"].append(rate)
-                out["out_n_samples"].append(n)
-                out["value_sum"].append(vsum)
-            for c in ("out_width", "out_height", "out_sample_rate", "out_n_samples"):
-                out[c] = pd.Series(out[c], dtype="Int32")
-            out["value_sum"] = pd.Series(out["value_sum"], dtype="Int64")
-            yield pd.DataFrame(out)
+    def row(doc_id, payload, mime):
+        w = h = rate = n = vsum = None
+        if mime == "image/bmp":
+            small = _bmp_pixels(payload)[::factor, ::factor, :]
+            reencoded = encode_bmp(small)
+            w, h, _ = decode_bmp(reencoded)
+            vsum = int(_bmp_pixels(reencoded).astype(np.int64).sum())
+        elif mime == "audio/wav":
+            in_rate, _, _ = decode_wav(payload)
+            small = _wav_samples(payload)[::factor]
+            reencoded = encode_wav(in_rate // factor, small)
+            rate, _, n = decode_wav(reencoded)
+            vsum = int(_wav_samples(reencoded).astype(np.int64).sum())
+        yield doc_id, mime, w, h, rate, n, vsum
 
-    return src.mapInPandas(batches, RESIZE_SCHEMA)
+    return map_docs(src, row, RESIZE_SCHEMA)
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads (mapInPandas).
+    """Arrow-batched feature extraction over binary payloads (map_docs).
 
-    Each batch arrives as a pandas DataFrame of (id, content, mime); the
-    stub 'decode' runs per batch, returning byte length + md5 checksum. This
-    is the slow-path pattern (SURVEY.md §2.10 UDF surface): Arrow transfer,
-    whole-batch python work, typed output schema.
+    Each (id, content, mime) row runs through the stub 'decode', returning
+    byte length + md5 checksum. This is the slow-path pattern (SURVEY.md
+    §2.10 UDF surface): Arrow transfer, per-document python work, typed
+    output schema.
     """
     src = df.select(
         F.col(id_col).alias("doc_id"), "content", F.col("media.mime").alias("mime")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [
-                decode_stub(bytes(c), m) for c, m in zip(pdf["content"], pdf["mime"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": pd.Series([len(d) for d in decoded], dtype="int32"),
-                    "checksum": [hashlib.md5(d).hexdigest() for d in decoded],
-                }
-            )
+    def row(doc_id, payload, mime):
+        decoded = decode_stub(payload, mime)
+        yield doc_id, len(decoded), hashlib.md5(decoded).hexdigest()
 
-    return src.mapInPandas(batches, FEATURE_SCHEMA)
+    return map_docs(src, row, FEATURE_SCHEMA)
 
 
 # ------------------------------------------------------------- video -----
@@ -911,20 +859,12 @@ def attach_video_assets(
     ``attach_media_assets``."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                make_rawvid(
-                    4 + int(d) % 8, 2 + int(d) % 6, 4 + int(d) % 13, fps
-                )
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "content": payloads}
-            )
+    def row(d):
+        yield d, make_rawvid(4 + d % 8, 2 + d % 6, 4 + d % 13, fps)
 
-    out = src.mapInPandas(
-        batches,
+    out = map_docs(
+        src,
+        row,
         T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -968,25 +908,13 @@ def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "ts_s": [],
-                "width": [], "height": [], "frame": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                payload = bytes(payload)
-                w, h, n_frames, fps = decode_rawvid_header(payload)
-                for idx in range(0, n_frames, every_n):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(idx)
-                    out["ts_s"].append(idx / fps)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["frame"].append(encode_bmp(_rawvid_frame(payload, idx)))
-            yield pd.DataFrame(out)
+    def row(doc_id, payload):
+        w, h, n_frames, fps = decode_rawvid_header(payload)
+        for idx in range(0, n_frames, every_n):
+            yield (doc_id, idx, idx / fps, w, h,
+                   encode_bmp(_rawvid_frame(payload, idx)))
 
-    return df.select("doc_id", "content").mapInPandas(batches, FRAME_SCHEMA)
+    return map_docs(df.select("doc_id", "content"), row, FRAME_SCHEMA)
 
 
 # ------------------------------------------------- container probes ------
@@ -1964,47 +1892,29 @@ def demux_mp4_samples(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     extracted bytes' sum — wrong table parsing or a wrong absolute
     offset flips the byte sum.
 
-    Arrow-batched mapInPandas: the demux runs where the bytes live and
+    Arrow-batched map_docs: the demux runs where the bytes live and
     only typed sample metadata shuffles. At 100 TB this is a pure map
     stage; the is_sync flag is the key-frame-only sampling knob a video
     curation pipeline filters on before handing extents to a decoder."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "sample_idx", "dts_ms", "size",
-            "offset_in_mdat", "is_sync", "byte_sum",
+    def row(d):
+        n = 8 + d % 13
+        sizes = [40 + ((d + 7 * i) % 50) for i in range(n)]
+        payloads = [
+            _cf_bytes(d * 13 + i * 17, 5, sizes[i]) for i in range(n)
         ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 8 + d % 13
-                sizes = [40 + ((d + 7 * i) % 50) for i in range(n)]
-                payloads = [
-                    _cf_bytes(d * 13 + i * 17, 5, sizes[i]) for i in range(n)
-                ]
-                mp4 = make_mp4_media(
-                    payloads, stts_runs=[(n // 2, 100), (n - n // 2, 150)]
-                )
-                base = mp4_mdat_start(mp4)
-                for s in demux_mp4(mp4):
-                    rows.append(
-                        (
-                            d, s["idx"], s["dts"], s["size"],
-                            s["offset"] - base, s["is_sync"], sum(s["data"]),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c, dt in (
-                ("doc_id", "int64"), ("sample_idx", "int32"), ("dts_ms", "int64"),
-                ("size", "int32"), ("offset_in_mdat", "int64"),
-                ("is_sync", "bool"), ("byte_sum", "int64"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
+        mp4 = make_mp4_media(
+            payloads, stts_runs=[(n // 2, 100), (n - n // 2, 150)]
+        )
+        base = mp4_mdat_start(mp4)
+        for s in demux_mp4(mp4):
+            yield (
+                d, s["idx"], s["dts"], s["size"],
+                s["offset"] - base, s["is_sync"], sum(s["data"]),
+            )
 
-    return src.mapInPandas(batches, MP4_SAMPLE_SCHEMA)
+    return map_docs(src, row, MP4_SAMPLE_SCHEMA)
 
 
 CONTAINER_PROBE_SCHEMA = T.StructType(
@@ -2029,46 +1939,25 @@ def probe_containers(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     without decoding a single sample."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    payload = make_mp4(
-                        duration_ms=1000 + (d % 30) * 500,
-                        width=320 + (d % 4) * 160,
-                        height=240 + (d % 4) * 120,
-                    )
-                    brand, dur, w, h, _n = probe_mp4(payload)
-                    rows.append(
-                        (d, "video/mp4", len(payload), dur, w, h, None, None)
-                    )
-                else:
-                    payload = make_mp3(
-                        n_frames=10 + d % 40,
-                        bitrate_kbps=_MP3_BITRATES[4 + d % 6],
-                        sample_rate=_MP3_RATES[d % 3],
-                    )
-                    nf, br, sr, dur = probe_mp3(payload)
-                    rows.append(
-                        (d, "audio/mpeg", len(payload), dur, None, None, br, sr)
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "n_bytes", "duration_ms",
-                    "width", "height", "bitrate_kbps", "sample_rate",
-                ],
+    def row(d):
+        if d % 2 == 0:
+            payload = make_mp4(
+                duration_ms=1000 + (d % 30) * 500,
+                width=320 + (d % 4) * 160,
+                height=240 + (d % 4) * 120,
             )
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["n_bytes"] = out["n_bytes"].astype("int32")
-            out["duration_ms"] = out["duration_ms"].astype("int64")
-            for c in ("width", "height", "bitrate_kbps", "sample_rate"):
-                out[c] = out[c].astype("Int32")
-            yield out
+            brand, dur, w, h, _n = probe_mp4(payload)
+            yield (d, "video/mp4", len(payload), dur, w, h, None, None)
+        else:
+            payload = make_mp3(
+                n_frames=10 + d % 40,
+                bitrate_kbps=_MP3_BITRATES[4 + d % 6],
+                sample_rate=_MP3_RATES[d % 3],
+            )
+            nf, br, sr, dur = probe_mp3(payload)
+            yield (d, "audio/mpeg", len(payload), dur, None, None, br, sr)
 
-    return src.mapInPandas(batches, CONTAINER_PROBE_SCHEMA)
+    return map_docs(src, row, CONTAINER_PROBE_SCHEMA)
 
 
 # --------------------------------------- multi-track demux + audio decode --
@@ -2271,42 +2160,23 @@ def demux_mp4_multitrack(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     extracted bytes' sum — a wrong per-trak scope (e.g. the video stss
     applied to audio) or a wrong interleaved offset flips the hash.
 
-    Arrow-batched mapInPandas: the demux runs where the bytes live and
+    Arrow-batched map_docs: the demux runs where the bytes live and
     only typed sample metadata shuffles — a pure map stage at 100 TB."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "track_id", "handler", "codec", "sample_idx",
-            "dts", "pts", "size", "offset_in_mdat", "is_sync", "byte_sum",
-        ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mp4, _nv, _na = _synthetic_2trak_mp4(d)
-                base = mp4_mdat_start(mp4)
-                for t in demux_mp4_tracks(mp4):
-                    for s in t["samples"]:
-                        rows.append(
-                            (
-                                d, t["track_id"], t["handler"], t["codec"],
-                                s["idx"], s["dts"], s["pts"], s["size"],
-                                s["offset"] - base, s["is_sync"],
-                                sum(s["data"]),
-                            )
-                        )
-            out = pd.DataFrame(rows, columns=cols)
-            for c, dt in (
-                ("doc_id", "int64"), ("track_id", "int32"),
-                ("sample_idx", "int32"), ("dts", "int64"), ("pts", "int64"),
-                ("size", "int32"), ("offset_in_mdat", "int64"),
-                ("is_sync", "bool"), ("byte_sum", "int64"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
+    def row(d):
+        mp4, _nv, _na = _synthetic_2trak_mp4(d)
+        base = mp4_mdat_start(mp4)
+        for t in demux_mp4_tracks(mp4):
+            for s in t["samples"]:
+                yield (
+                    d, t["track_id"], t["handler"], t["codec"],
+                    s["idx"], s["dts"], s["pts"], s["size"],
+                    s["offset"] - base, s["is_sync"],
+                    sum(s["data"]),
+                )
 
-    return src.mapInPandas(batches, MP4_TRACK_SAMPLE_SCHEMA)
+    return map_docs(src, row, MP4_TRACK_SAMPLE_SCHEMA)
 
 
 AUDIO_PCM_SCHEMA = T.StructType(
@@ -2338,61 +2208,43 @@ def decode_mp4_audio(
     the stateful expander (the fourcc still travels through the stsd
     box and drives the routing, same as the memoryless codecs).
 
-    Arrow-batched mapInPandas; decode runs where the bytes live."""
+    Arrow-batched map_docs; decode runs where the bytes live."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "sample_idx", "dts", "n_pcm",
-            "pcm_sum", "pcm_min", "pcm_max",
-        ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mp4, _nv, _na = _synthetic_2trak_mp4(d, audio_codec)
-                for t in demux_mp4_tracks(mp4):
-                    if t["handler"] != "soun":
-                        continue
-                    codec = t["codec"]
-                    if codec == "ima4":
-                        expand = ima4_decode
-                    elif codec == "ulaw":
-                        expand = lambda b: ulaw_decode(  # noqa: E731
-                            np.frombuffer(b, dtype=np.uint8)
-                        )
-                    elif codec == "alaw":
-                        expand = lambda b: alaw_decode(  # noqa: E731
-                            np.frombuffer(b, dtype=np.uint8)
-                        )
-                    elif codec in ("sowt", "twos"):
-                        expand = lambda b: pcm16_decode(  # noqa: E731
-                            b, big_endian=(codec == "twos")
-                        )
-                    else:
-                        raise NotImplementedError(
-                            f"audio codec {codec!r}: G.711 ('ulaw'/'alaw'), "
-                            "16-bit PCM ('sowt'/'twos') and IMA ADPCM "
-                            "('ima4') decode only"
-                        )
-                    for s in t["samples"]:
-                        pcm = expand(s["data"])
-                        rows.append(
-                            (
-                                d, s["idx"], s["dts"], len(pcm),
-                                int(pcm.sum()), int(pcm.min()), int(pcm.max()),
-                            )
-                        )
-            out = pd.DataFrame(rows, columns=cols)
-            for c, dt in (
-                ("doc_id", "int64"), ("sample_idx", "int32"), ("dts", "int64"),
-                ("n_pcm", "int32"), ("pcm_sum", "int64"),
-                ("pcm_min", "int32"), ("pcm_max", "int32"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
+    def row(d):
+        mp4, _nv, _na = _synthetic_2trak_mp4(d, audio_codec)
+        for t in demux_mp4_tracks(mp4):
+            if t["handler"] != "soun":
+                continue
+            codec = t["codec"]
+            if codec == "ima4":
+                expand = ima4_decode
+            elif codec == "ulaw":
+                expand = lambda b: ulaw_decode(  # noqa: E731
+                    np.frombuffer(b, dtype=np.uint8)
+                )
+            elif codec == "alaw":
+                expand = lambda b: alaw_decode(  # noqa: E731
+                    np.frombuffer(b, dtype=np.uint8)
+                )
+            elif codec in ("sowt", "twos"):
+                expand = lambda b: pcm16_decode(  # noqa: E731
+                    b, big_endian=(codec == "twos")
+                )
+            else:
+                raise NotImplementedError(
+                    f"audio codec {codec!r}: G.711 ('ulaw'/'alaw'), "
+                    "16-bit PCM ('sowt'/'twos') and IMA ADPCM "
+                    "('ima4') decode only"
+                )
+            for s in t["samples"]:
+                pcm = expand(s["data"])
+                yield (
+                    d, s["idx"], s["dts"], len(pcm),
+                    int(pcm.sum()), int(pcm.min()), int(pcm.max()),
+                )
 
-    return src.mapInPandas(batches, AUDIO_PCM_SCHEMA)
+    return map_docs(src, row, AUDIO_PCM_SCHEMA)
 
 
 MP3_FRAME_SCHEMA = T.StructType(
@@ -2414,38 +2266,24 @@ def demux_mp3_frame_table(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     one output row per frame with its byte extent, exact integer
     timestamp, and the main-data bytes' sum — wrong frame-length
     arithmetic (144*br/rate), a missed header field, or a misplaced
-    extent flips the sum. Arrow-batched mapInPandas: a pure map stage
+    extent flips the sum. Arrow-batched map_docs: a pure map stage
     at 100 TB, the audio twin of the MP4 sample demux."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "frame_idx", "offset", "size", "dts_ms", "byte_sum"]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = make_mp3(
-                    n_frames=10 + d % 40,
-                    bitrate_kbps=_MP3_BITRATES[4 + d % 6],
-                    sample_rate=_MP3_RATES[d % 3],
-                    fill_seed=d % 256,
-                )
-                for fr in demux_mp3_frames(payload):
-                    rows.append(
-                        (
-                            d, fr["idx"], fr["offset"], fr["size"],
-                            fr["dts_ms"], sum(fr["data"][4:]),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c, dt in (
-                ("doc_id", "int64"), ("frame_idx", "int32"), ("offset", "int64"),
-                ("size", "int32"), ("dts_ms", "int64"), ("byte_sum", "int64"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
+    def row(d):
+        payload = make_mp3(
+            n_frames=10 + d % 40,
+            bitrate_kbps=_MP3_BITRATES[4 + d % 6],
+            sample_rate=_MP3_RATES[d % 3],
+            fill_seed=d % 256,
+        )
+        for fr in demux_mp3_frames(payload):
+            yield (
+                d, fr["idx"], fr["offset"], fr["size"],
+                fr["dts_ms"], sum(fr["data"][4:]),
+            )
 
-    return src.mapInPandas(batches, MP3_FRAME_SCHEMA)
+    return map_docs(src, row, MP3_FRAME_SCHEMA)
 
 
 # ------------------------------------------------------- fragmented MP4 ---
@@ -2985,92 +2823,76 @@ def demux_mp4_fragmented_table(df: DataFrame, id_col: str = "doc_id") -> DataFra
     (track, sample) with the fragment sequence number and the sample's
     byte offset RELATIVE to its fragment's data region (absolute file
     offsets depend on box sizes, which no SQL oracle should restate).
-    Arrow-batched mapInPandas: mux + demux happen where the bytes live,
+    Arrow-batched map_docs: mux + demux happen where the bytes live,
     only typed features shuffle — at 100 TB this is a map-only stage."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MP4_FRAGMENT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 2 + d % 3
-                sv, sa = 3 + d % 4, 4 + d % 3
-                dv = 100 + (d % 5) * 10
-                vid = [
-                    [
-                        _cf_bytes(d * 7 + (f * sv + k) * 13, 3,
-                                  20 + (d + 7 * (f * sv + k)) % 40)
-                        for k in range(sv)
-                    ]
-                    for f in range(nf)
-                ]
-                aud = [
-                    [
-                        _cf_bytes(d * 3 + (f * sa + k) * 7, 11,
-                                  10 + (d + 3 * (f * sa + k)) % 20)
-                        for k in range(sa)
-                    ]
-                    for f in range(nf)
-                ]
-                payload = make_mp4_fragmented(
-                    [
-                        {
-                            "handler": "vide",
-                            "codec": "mp4v",
-                            "timescale": 600,
-                            "default_duration": dv,
-                            "frag_samples": vid,
-                            "frag_cts": [
-                                [((f * sv + k + 1) % 3) * 50
-                                 for k in range(sv)]
-                                for f in range(nf)
-                            ],
-                            "sync_first": True,
-                        },
-                        {
-                            "handler": "soun",
-                            "codec": _AUDIO_FOURCC[d % 4],
-                            "timescale": 8000,
-                            "frag_samples": aud,
-                            "frag_durations": [
-                                [160 + 20 * ((f * sa + k) % 2)
-                                 for k in range(sa)]
-                                for f in range(nf)
-                            ],
-                        },
-                    ]
+    def row(d):
+        nf = 2 + d % 3
+        sv, sa = 3 + d % 4, 4 + d % 3
+        dv = 100 + (d % 5) * 10
+        vid = [
+            [
+                _cf_bytes(d * 7 + (f * sv + k) * 13, 3,
+                          20 + (d + 7 * (f * sv + k)) % 40)
+                for k in range(sv)
+            ]
+            for f in range(nf)
+        ]
+        aud = [
+            [
+                _cf_bytes(d * 3 + (f * sa + k) * 7, 11,
+                          10 + (d + 3 * (f * sa + k)) % 20)
+                for k in range(sa)
+            ]
+            for f in range(nf)
+        ]
+        payload = make_mp4_fragmented(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "mp4v",
+                    "timescale": 600,
+                    "default_duration": dv,
+                    "frag_samples": vid,
+                    "frag_cts": [
+                        [((f * sv + k + 1) % 3) * 50
+                         for k in range(sv)]
+                        for f in range(nf)
+                    ],
+                    "sync_first": True,
+                },
+                {
+                    "handler": "soun",
+                    "codec": _AUDIO_FOURCC[d % 4],
+                    "timescale": 8000,
+                    "frag_samples": aud,
+                    "frag_durations": [
+                        [160 + 20 * ((f * sa + k) % 2)
+                         for k in range(sa)]
+                        for f in range(nf)
+                    ],
+                },
+            ]
+        )
+        tracks = demux_mp4_fragments(payload)
+        frag_base: dict[int, int] = {}
+        for t in tracks:
+            for s in t["samples"]:
+                fs = s["frag_seq"]
+                if fs not in frag_base or s["offset"] < frag_base[fs]:
+                    frag_base[fs] = s["offset"]
+        for t in tracks:
+            for s in t["samples"]:
+                yield (
+                    d, t["track_id"], t["handler"], t["codec"],
+                    s["frag_seq"], s["idx"], s["dts"], s["pts"],
+                    s["size"],
+                    s["offset"] - frag_base[s["frag_seq"]],
+                    s["is_sync"], sum(s["data"]),
                 )
-                tracks = demux_mp4_fragments(payload)
-                frag_base: dict[int, int] = {}
-                for t in tracks:
-                    for s in t["samples"]:
-                        fs = s["frag_seq"]
-                        if fs not in frag_base or s["offset"] < frag_base[fs]:
-                            frag_base[fs] = s["offset"]
-                for t in tracks:
-                    for s in t["samples"]:
-                        rows.append(
-                            (
-                                d, t["track_id"], t["handler"], t["codec"],
-                                s["frag_seq"], s["idx"], s["dts"], s["pts"],
-                                s["size"],
-                                s["offset"] - frag_base[s["frag_seq"]],
-                                s["is_sync"], sum(s["data"]),
-                            )
-                        )
-            out = pd.DataFrame(rows, columns=cols)
-            for c, dt in (
-                ("doc_id", "int64"), ("track_id", "int32"),
-                ("frag_seq", "int32"), ("sample_idx", "int32"),
-                ("dts", "int64"), ("pts", "int64"), ("size", "int32"),
-                ("offset_in_frag", "int64"), ("byte_sum", "int64"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
 
-    return src.mapInPandas(batches, MP4_FRAGMENT_SCHEMA)
+    return map_docs(src, row, MP4_FRAGMENT_SCHEMA)
 
 
 # ----------------------------------------------------------- ID3 tags ----
@@ -3385,63 +3207,47 @@ def mp3_id3_table(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the footer) and the demux arithmetic without running either."""
     src = df.select(F.col(id_col).alias("doc_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MP3_ID3_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                version = 2 + d % 3
-                unsync = d % 4 == 1
-                dli = version == 4 and d % 5 < 2
-                foot = version == 4 and d % 2 == 0
-                year = str(1970 + d % 30)
-                frames = {
-                    "TIT2": f"title-{d}" + ("ÿÿ" if unsync else ""),
-                    "TPE1": f"artist-{d % 13}",
-                    "TALB": f"album-{d % 7}",
-                    ("TYER" if version != 4 else "TDRC"): year,
-                    "TCON": f"genre-{d % 5}",
-                }
-                audio = make_mp3(
-                    n_frames=10 + d % 20,
-                    bitrate_kbps=_MP3_BITRATES[4 + d % 6],
-                    sample_rate=_MP3_RATES[d % 3],
-                    fill_seed=d % 256,
-                )
-                payload = (
-                    make_id3v2(
-                        frames, version=version, unsync=unsync,
-                        data_length_indicator=dli, footer=foot,
-                    )
-                    + audio
-                    + make_id3v1(f"v1-{d}", "", "", year, d % 80)
-                )
-                bare, v2_len, v2, v1 = mp3_strip_tags(payload)
-                fr = demux_mp3_frames(bare)
-                n_frames, _br, rate, duration_ms = probe_mp3(bare)
-                rows.append(
-                    (
-                        d, version, unsync,
-                        v2.get("TIT2"), v2.get("TPE1"),
-                        v2.get("TALB"),
-                        v2.get("TYER") or v2.get("TDRC"),
-                        v2.get("TCON"), v2_len, len(bare),
-                        len(fr), duration_ms,
-                        v1["title"], v1["genre"],
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for c, dt in (
-                ("doc_id", "int64"), ("id3_version", "int32"),
-                ("tag_bytes", "int32"), ("audio_bytes", "int64"),
-                ("n_frames", "int32"), ("duration_ms", "int64"),
-                ("v1_genre", "int32"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
+    def row(d):
+        version = 2 + d % 3
+        unsync = d % 4 == 1
+        dli = version == 4 and d % 5 < 2
+        foot = version == 4 and d % 2 == 0
+        year = str(1970 + d % 30)
+        frames = {
+            "TIT2": f"title-{d}" + ("ÿÿ" if unsync else ""),
+            "TPE1": f"artist-{d % 13}",
+            "TALB": f"album-{d % 7}",
+            ("TYER" if version != 4 else "TDRC"): year,
+            "TCON": f"genre-{d % 5}",
+        }
+        audio = make_mp3(
+            n_frames=10 + d % 20,
+            bitrate_kbps=_MP3_BITRATES[4 + d % 6],
+            sample_rate=_MP3_RATES[d % 3],
+            fill_seed=d % 256,
+        )
+        payload = (
+            make_id3v2(
+                frames, version=version, unsync=unsync,
+                data_length_indicator=dli, footer=foot,
+            )
+            + audio
+            + make_id3v1(f"v1-{d}", "", "", year, d % 80)
+        )
+        bare, v2_len, v2, v1 = mp3_strip_tags(payload)
+        fr = demux_mp3_frames(bare)
+        n_frames, _br, rate, duration_ms = probe_mp3(bare)
+        yield (
+            d, version, unsync,
+            v2.get("TIT2"), v2.get("TPE1"),
+            v2.get("TALB"),
+            v2.get("TYER") or v2.get("TDRC"),
+            v2.get("TCON"), v2_len, len(bare),
+            len(fr), duration_ms,
+            v1["title"], v1["genre"],
+        )
 
-    return src.mapInPandas(batches, MP3_ID3_SCHEMA)
+    return map_docs(src, row, MP3_ID3_SCHEMA)
 
 
 # ---------------------------------------------------------------- WebP ---

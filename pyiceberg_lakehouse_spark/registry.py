@@ -426,221 +426,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "fn_pandas_scalar",
 )
 
-_R16_WINDOW: tuple[str, ...] = (
-    # ---- r16 rotation. VERDICT r15 task #3: the 26 r15 first-timers
-    # (the 19 rotated-in backlog rows + the 7 r15-new rows) HOLD for
-    # their confirming round; 8 standing anchors + 2 category sentinels
-    # stay; the remaining 14 slots start as multi-green keepers (the 11
-    # r14 first-timers whose second-round holds completed in r15, plus
-    # the three r15 keepers stream_stream_anti_join /
-    # scan_warc_responses / scan_archive_entries) and are displaced
-    # one-by-one as NEW r16 oracle-checkable rows land, per the standing
-    # fresh-outranks-multi-green principle. New r16 rows so far:
-    # lh_iceberg_mor_scan (Iceberg v2 MERGE-ON-READ interop — position
-    # + equality delete FILES applied from the metadata alone with the
-    # spec's sequence rules; VERDICT r15 task #1) took
-    # text_markdown_extract's keeper slot (text_ stays covered by nine
-    # held text_ rows; markdown stays local-gated + pytest-pinned).
-    # multimodal_mp3_samples (MP3 Layer-III sample decode through the
-    # from-scratch operators/mp3.py: side-info walk, bit reservoir,
-    # scalefactors, validated Huffman tables with sign bits + count1
-    # quads, requantization, alias butterflies, IMDCT + overlap-add,
-    # polyphase synthesis; integer spectra round-trip exactly and the
-    # float chain dual-derives against a NumPy matrix pipeline; VERDICT
-    # r15 task #5) took multimodal_webp_animation's keeper slot
-    # (animated WebP stays local-gated + pytest-pinned; multimodal_
-    # keeps eleven held rows incl. the VP8 + quality rows).
-    # multimodal_ogg_samples (Vorbis floor1+residue2 PCM decode through
-    # the from-scratch operators/vorbis.py: in-band codebooks with the
-    # spec's canonical codeword assignment, VQ lookup, floor1 integer
-    # Bresenham curve + render_point prediction, residue2 cascade
-    # decode, IMDCT/window/overlap-add — integer features closed-form
-    # in the oracle, float synthesis dual-derived vs NumPy; VERDICT r15
-    # task #8) took multimodal_flac_decode's keeper slot (FLAC stays
-    # local-gated + pytest-pinned with its STREAMINFO-MD5 check; the
-    # audio family keeps the held audio-quality + ogg-tags rows).
-    # scan_fwf_checked (fixed-width-field ingest with per-line
-    # validation quarantine — the mainframe-export format closing the
-    # text-ingest isolation matrix next to CSV/JSON; pure-Column
-    # slicing, plan-pinned no-Python) took text_pii_redact_extended's
-    # keeper slot (PII redaction stays local-gated + plan-pinned;
-    # text_ keeps nine held rows). fn_uri_parse (RFC 3986
-    # decomposition via the spec's appendix-B regex + percent-decode,
-    # all pure Column expressions, plan-pinned no-Python no-Exchange)
-    # took text_pdf_extract's keeper slot (the PDF reader stays
-    # driver-covered by the held text_pdf_images row and its bench
-    # phase; fn_ keeps the held VARIANT row).
-    # lh_iceberg_partition_scan (Iceberg v2 PARTITION PRUNING from the
-    # metadata alone: r102 partition structs in the manifests, a
-    # derived identity spec in metadata.json, 3 of 5 files pruned
-    # before any data IO with a position delete still applying inside a
-    # kept partition) took multimodal_tiff_lzw's keeper slot (the TIFF
-    # family stays driver-covered by the held bilevel row + the tiled
-    # keeper; LZW stays local-gated + pytest-pinned).
-    # anchors
-    "agg_q1_pricing_summary",
-    "agg_q9_product_profit",
-    "agg_q13_customer_distribution",
-    "agg_q18_large_orders",
-    "agg_q21_suppliers_kept_waiting",
-    "join_right_outer",
-    "sim_cosine_topk",
-    "stream_lh_sink_hourly",
-    # category sentinels (test_entry_contract: every prefix sampled)
-    "win_ntile_cume",
-    "train_pack_sequences",
-    # r15 first-timers, second-round hold (19 rotated-in backlog rows)
-    "graph_pagerank",
-    "dedup_image_dhash",
-    "multimodal_audio_quality",
-    "multimodal_image_quality",
-    "multimodal_scene_cuts",
-    "multimodal_mkv_probe",
-    "multimodal_mp4_itunes",
-    "fn_variant_extract",
-    "lh_delete_positions",
-    "scan_orc_roundtrip",
-    "scan_warc_revisits",
-    "text_ass_cues",
-    "text_charset_decode",
-    "text_docx_extract",
-    "text_epub_extract",
-    "text_html_metadata",
-    "text_odt_extract",
-    "text_rtf_extract",
-    "text_unicode_nfc",
-    # r15 first-timers, second-round hold (7 r15-new rows; the Avro
-    # roundtrip's construction extends IN PLACE this round with the
-    # zstd/bzip2/xz codecs, so its r16 row hashes the extended oracle)
-    "multimodal_webp_lossy_decode",
-    "text_pdf_images",
-    "scan_avro_roundtrip",
-    "lh_iceberg_metadata_scan",
-    "multimodal_ico_decode",
-    "multimodal_avif_probe",
-    "multimodal_ogg_tags",
-    # new r16 rows (each in its own round, no-tail principle)
-    "lh_iceberg_mor_scan",
-    "multimodal_mp3_samples",
-    "multimodal_ogg_samples",
-    "scan_fwf_checked",
-    "fn_uri_parse",
-    "lh_iceberg_partition_scan",
-    # multi-green keepers (r14 first-timers double-green after r15 +
-    # the three r15 keepers; each slot is first in line for a NEW r16
-    # row as it lands)
-    "multimodal_tiff_bilevel",
-    "lh_external_scan",
-    "multimodal_tiff_tiled",
-    "multimodal_webp_decode",
-    "scan_sitemap_urls",
-    "stream_stream_anti_join",
-    "scan_warc_responses",
-    "scan_archive_entries",
-)
-
-_R15_WINDOW: tuple[str, ...] = (
-    # ---- r15 rotation. VERDICT r14 task #1: the 19 oracle-checkable
-    # queries written after the r14 window froze take their driver slots
-    # THIS round (local-green is evidence, driver-green is the contract).
-    # Composition: 8 standing anchors (flagship pricing + four TPC-H
-    # topologies + join_right_outer + cosine top-k + the exactly-once
-    # streaming sink), 2 category sentinels (win_/train_), the 11 r14
-    # first-timers on their second-round hold, the 19 r14 post-freeze
-    # first-timers, and 10 multi-green structural keepers that new r15
-    # rows displace as they land (fresh code outranks a multi-green
-    # non-anchor, per the standing rotation principle).
-    # anchors
-    "agg_q1_pricing_summary",
-    "agg_q9_product_profit",
-    "agg_q13_customer_distribution",
-    "agg_q18_large_orders",
-    "agg_q21_suppliers_kept_waiting",
-    "join_right_outer",
-    "sim_cosine_topk",
-    "stream_lh_sink_hourly",
-    # category sentinels (test_entry_contract: every prefix sampled)
-    "win_ntile_cume",
-    "train_pack_sequences",
-    # r14 first-timers, second-round hold (went driver-green in r14's
-    # window for the first time; one confirming round before rotation)
-    "text_pdf_extract",
-    "multimodal_tiff_bilevel",
-    "lh_external_scan",
-    "multimodal_tiff_lzw",
-    "text_markdown_extract",
-    "multimodal_webp_animation",
-    "text_pii_redact_extended",
-    "multimodal_flac_decode",
-    "multimodal_tiff_tiled",
-    "multimodal_webp_decode",
-    "scan_sitemap_urls",
-    # r14 post-freeze first-timers: every oracle-checkable query that has
-    # never had a driver window slot (VERDICT r14 "what's wrong" debt)
-    "graph_pagerank",
-    "dedup_image_dhash",
-    "multimodal_audio_quality",
-    "multimodal_image_quality",
-    "multimodal_scene_cuts",
-    "multimodal_mkv_probe",
-    "multimodal_mp4_itunes",
-    "fn_variant_extract",
-    "lh_delete_positions",
-    "scan_orc_roundtrip",
-    "scan_warc_revisits",
-    "text_ass_cues",
-    "text_charset_decode",
-    "text_docx_extract",
-    "text_epub_extract",
-    "text_html_metadata",
-    "text_odt_extract",
-    "text_rtf_extract",
-    "text_unicode_nfc",
-    # multi-green structural keepers (heavyweight families stay
-    # represented; each slot is first in line for a NEW r15 row)
-    "stream_stream_anti_join",
-    # (stream_lh_text_search's keeper slot goes to the WARC-responses
-    # row, fresh again with br/zstd Content-Encoding decode through the
-    # NEW codec layers; streaming keeps anti_join + sink_hourly, and
-    # the text-search index stays local-gated + pytest-pinned)
-    "scan_warc_responses",
-    # (stream_lh_neardup's keeper slot goes to the NEW BMP/ICO favicon
-    # decode row — streaming keeps anti_join + sink_hourly +
-    # text_search, and the near-dup index stays local-gated)
-    "multimodal_ico_decode",
-    # (lh_cdf_feed's keeper slot goes to the NEW from-scratch Avro
-    # container source — the last gated tabular source; lh_ stays
-    # covered by external_scan + delete_positions, and the change-feed
-    # family stays local-gated + pytest-pinned)
-    "scan_avro_roundtrip",
-    # (lh_rollup_percentile's keeper slot goes to the archive-explosion
-    # row, fresh again with the .tar.zst wrapper through the NEW
-    # RFC 8878 zstd decoder; rollups stay covered by lh_cdf_feed's
-    # commit-time path + local gates)
-    "scan_archive_entries",
-    # (dedup_simhash_selfcheck's keeper slot goes to the NEW scanned-PDF
-    # image-extraction row — dedup_ stays covered by dedup_image_dhash)
-    "text_pdf_images",
-    # (lh_bloom_join_scan's keeper slot goes to the NEW AVIF/HEIF
-    # container probe — join_ stays covered by join_right_outer, lh_ by
-    # external_scan/delete_positions/cdf_feed, and the bloom index
-    # stays local-gated + plan-pinned)
-    "multimodal_avif_probe",
-    # (fn_struct_ops' keeper slot goes to the NEW VorbisComment/OpusTags
-    # extraction row — fn_ stays covered by fn_variant_extract)
-    "multimodal_ogg_tags",
-    # (pipeline_crawl_ingest's keeper slot goes to the NEW Apache
-    # Iceberg v2 metadata-interop row — the reference's namesake read
-    # path through the from-scratch Avro manifests; the crawl composite
-    # stays local-gated, its WARC/HTTP layers driver-covered by the
-    # fresh scan_warc_responses row)
-    "lh_iceberg_metadata_scan",
-    # (multimodal_ogg_packets' keeper slot goes to the NEW lossy-WebP
-    # VP8 key-frame decode — the round's headline codec; the ogg demux
-    # stays local-gated + pytest-pinned)
-    "multimodal_webp_lossy_decode",
-)
-
 
 def load_all() -> None:
     """Import every module that registers queries (idempotent), then order

@@ -11,6 +11,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Physical-plan node names of every Python evaluation stage. A "no Python
+# stage" plan pin must reject all of them, so a query that moves from one
+# Python evaluator to another cannot slip past it.
+PYTHON_STAGE_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

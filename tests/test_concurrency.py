@@ -243,3 +243,57 @@ def test_partition_replace_overlap_still_conflicts(spark, warehouse):
             removed_paths=[],
             retry_conflicts=5,
         )
+
+
+def test_stale_handle_expire_keeps_other_handles_commit(spark, warehouse):
+    """expire_snapshots rewrites the whole log; run from a handle that
+    has not seen another handle's append, it must squash the log as it is
+    on disk, not drop that append."""
+    from pyiceberg_lakehouse_spark.lakehouse.maintenance import expire_snapshots
+
+    lh = Lakehouse(spark, warehouse)
+    a = lh.create_table("ns.stale_expire", _schema())
+    a.append(spark.range(0, 5))
+    a.append(spark.range(5, 10))
+    b = lh.load_table("ns.stale_expire")
+    b.append(spark.range(10, 15))
+    expire_snapshots(a, keep_last=1)  # a's cached log lacks b's append
+    fresh = lh.load_table("ns.stale_expire")
+    assert sorted(r.id for r in fresh.scan().collect()) == list(range(15))
+    assert len(fresh.log.snapshots) == 1
+    # the expiring handle is current again and can keep committing
+    a.append(spark.range(15, 20))
+    assert lh.load_table("ns.stale_expire").scan().count() == 20
+
+
+def test_expire_racing_two_process_appends_loses_nothing(spark, warehouse):
+    """Stress: two writer processes append while this process expires the
+    log over and over; every appended file must still be live at the end
+    (a lost update would drop some)."""
+    from pyiceberg_lakehouse_spark.lakehouse.maintenance import expire_snapshots
+
+    lh = Lakehouse(spark, warehouse)
+    t = lh.create_table("ns.mp_expire_race", _schema())
+    n_per = 20
+    workers = [
+        subprocess.Popen(
+            [sys.executable, "-c", _WORKER.format(repo=REPO), t.table_dir, wid, str(n_per)],
+            stdout=subprocess.PIPE,
+            stderr=subprocess.PIPE,
+            text=True,
+        )
+        for wid in ("a", "b")
+    ]
+    time.sleep(0.3)  # both workers reach the barrier before it opens
+    with open(os.path.join(t.table_dir, "_go"), "w") as fh:
+        fh.write("go")
+    deadline = time.time() + 60
+    while any(w.poll() is None for w in workers) and time.time() < deadline:
+        t.log.load()  # each expire is a fresh read-modify-write racing the writers
+        expire_snapshots(t, keep_last=1)
+    for w in workers:
+        out, err = w.communicate(timeout=60)
+        assert w.returncode == 0, f"worker failed: {err}\n{out}"
+    paths = {f["path"] for f in SnapshotLog(t.table_dir).load().live_files()}
+    want = {f"/fake/{wid}_{i}.parquet" for wid in ("a", "b") for i in range(n_per)}
+    assert want <= paths, sorted(want - paths)[:5]

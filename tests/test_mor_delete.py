@@ -64,3 +64,36 @@ def test_compaction_materializes_deletes(spark, warehouse, sf_dir):
     pre = t.history()[-2].snapshot_id
     assert len(t.log.live_deletes(pre)) == 1
     assert t.read_snapshot(pre).count() == expected
+
+
+def _ids_table(spark, warehouse, name):
+    lh = Lakehouse(spark, warehouse)
+    t = lh.create_table(
+        name, spark.range(0).select(F.col("id"), F.col("id").alias("v")).schema
+    )
+    t.append(spark.range(1000).select(F.col("id"), F.col("id").alias("v")))
+    t.delete_keys(spark.range(10).select("id"), ["id"])
+    assert t.scan().count() == 990
+    return t
+
+
+def test_delete_where_keeps_merge_on_read_deletes(spark, warehouse):
+    """A copy-on-write delete rewrites files newer than every pending
+    merge-on-read delete, so it must apply those deletes while reading:
+    a delete_where that matches nothing must not bring back the 10 rows
+    delete_keys removed."""
+    t = _ids_table(spark, warehouse, "ns.cow_after_mor")
+    t.delete_where(F.col("id") < 0)
+    assert t.scan().count() == 990
+    assert t.scan().filter(F.col("id") < 10).count() == 0
+
+
+def test_update_where_keeps_merge_on_read_deletes(spark, warehouse):
+    """Same for a copy-on-write update: deleted rows stay deleted, the
+    update lands on the surviving rows only."""
+    t = _ids_table(spark, warehouse, "ns.update_after_mor")
+    t.update_where(F.col("id") < 20, {"v": F.lit(-1)})
+    rows = t.scan()
+    assert rows.count() == 990
+    assert rows.filter(F.col("id") < 10).count() == 0
+    assert rows.filter(F.col("v") == -1).count() == 10

@@ -5,9 +5,13 @@ SimHash, hyperplane LSH) the correctness signal their engine-specific hash
 families can't get from the SQL oracle.
 """
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from pyiceberg_lakehouse_spark.localdf import map_docs
 from pyiceberg_lakehouse_spark.operators import dedup, multimodal, similarity, text
 from pyiceberg_lakehouse_spark.operators.asof import asof_join_events
 from pyiceberg_lakehouse_spark.sources.testdata import load_table
@@ -1597,3 +1601,92 @@ def test_split_leakage_safe_colocates_duplicates(spark):
     for i in range(0, 200, 3):
         assert split_of[i] == split_of[1000 + i], i  # copies co-located
     assert {r.split for r in out} == {"train", "test"}
+
+
+# ---- map_docs: the per-document map primitive ----
+
+_MAP_DOCS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("k", T.IntegerType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("n_bytes", T.IntegerType()),
+    ]
+)
+
+
+def _payload_docs(spark, n: int = 12):
+    return spark.range(n, numPartitions=3).select(
+        F.col("id").alias("doc_id"),
+        F.encode(F.concat(F.lit("doc-"), F.col("id").cast("string")), "utf-8").alias("payload"),
+    )
+
+
+def test_map_docs_one_to_many_and_binary_input(spark):
+    """row_fn yields zero or more tuples per input row; a binary input
+    column arrives as ``bytes``."""
+
+    def row(doc_id, payload):
+        assert isinstance(payload, bytes)
+        for k in range(doc_id % 3):  # 0, 1 or 2 rows per document
+            yield doc_id, k, float(k), len(payload)
+
+    got = sorted(map_docs(_payload_docs(spark), row, _MAP_DOCS_SCHEMA).collect())
+    want = sorted(
+        (d, k, float(k), len(f"doc-{d}")) for d in range(12) for k in range(d % 3)
+    )
+    assert [tuple(r) for r in got] == want
+
+
+def test_map_docs_row_fn_yielding_nothing(spark):
+    """Batches whose every row yields nothing contribute no rows, and a
+    frame where no row yields anything is empty but typed."""
+
+    def late_only(doc_id, payload):
+        if doc_id >= 8:  # only the last of the three input partitions
+            yield doc_id, 0, 0.0, len(payload)
+
+    got = map_docs(_payload_docs(spark), late_only, _MAP_DOCS_SCHEMA).collect()
+    assert sorted(r.doc_id for r in got) == [8, 9, 10, 11]
+
+    def nothing(doc_id, payload):
+        return iter(())
+
+    out = map_docs(_payload_docs(spark), nothing, _MAP_DOCS_SCHEMA)
+    assert out.collect() == []
+    assert out.schema == _MAP_DOCS_SCHEMA
+
+
+def test_map_docs_null_int_and_null_vs_nan_double(spark):
+    """None is NULL in a nullable IntegerType column; in a DoubleType
+    column None stays NULL and float('nan') stays NaN (no pandas step
+    folds NaN into NULL)."""
+
+    def row(doc_id, payload):
+        k = None if doc_id % 2 else int(doc_id)
+        score = None if doc_id % 3 == 0 else (float("nan") if doc_id % 3 == 1 else 0.5)
+        yield doc_id, k, score, None
+
+    rows = {r.doc_id: r for r in map_docs(_payload_docs(spark), row, _MAP_DOCS_SCHEMA).collect()}
+    assert len(rows) == 12
+    for d, r in rows.items():
+        assert r.k == (None if d % 2 else d)
+        assert r.n_bytes is None
+        if d % 3 == 0:
+            assert r.score is None
+        elif d % 3 == 1:
+            assert r.score is not None and math.isnan(r.score)
+        else:
+            assert r.score == 0.5
+
+
+def test_map_docs_plans_map_in_arrow(spark):
+    """The stage is one MapInArrow node, with no pandas evaluator."""
+
+    def row(doc_id, payload):
+        yield doc_id, 0, 0.0, len(payload)
+
+    out = map_docs(_payload_docs(spark), row, _MAP_DOCS_SCHEMA)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan

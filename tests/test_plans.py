@@ -12,6 +12,7 @@ correct, which is exactly why it needs its own tests.
 import re
 
 import pytest
+from conftest import PYTHON_STAGE_NODES
 
 from pyiceberg_lakehouse_spark.registry import QUERIES, load_all
 
@@ -233,11 +234,11 @@ def test_tfidf_vocab_join_keyed_not_cartesian(spark, sf_dir):
 
 
 def test_multimodal_resize_no_shuffle(spark, sf_dir):
-    """Decode/decimate/re-encode runs where the bytes are (mapInPandas over
+    """Decode/decimate/re-encode runs where the bytes are (map_docs over
     the scan) — a shuffle of binary payloads would be a 100 TB bug."""
     plan = plan_of(spark, "multimodal_resize", sf_dir)
     assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_ivf_probe_no_cartesian_no_corpus_assign(spark, sf_dir):
@@ -426,7 +427,7 @@ def test_hll_rollup_delta_partial_agg_no_raw_row_shuffle(spark, sf_dir):
     # scalar parts 2 + idx-stage 2 + dims-stage objhashagg for collect)
     assert len(re.findall(r"\(\d+\) (?:Object)?HashAggregate", plan)) >= 4, plan[:1200]
     # no pandas/python evaluation anywhere in the register build
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert not [n for n in PYTHON_STAGE_NODES if n in plan]
     assert "CartesianProduct" not in plan
     # partial_max over the rank before the exchange (map-side combine)
     assert re.search(r"partial_max", plan) or re.search(
@@ -442,7 +443,7 @@ def test_substring_spans_no_scale_killers(spark, sf_dir):
     nothing degenerates to a cartesian product or a Python evaluator."""
     plan = plan_of(spark, "dedup_substring_spans", sf_dir)
     assert "CartesianProduct" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert not [n for n in PYTHON_STAGE_NODES if n in plan]
     # dup-kgram count reduces partially before its shuffle
     assert re.search(r"partial_count", plan), plan[:1200]
     # exactly one Window pass for the interval-union coverage
@@ -468,7 +469,7 @@ def test_percentile_rollup_delta_partial_agg(spark, sf_dir):
     )
     plan = df._jdf.queryExecution().explainString(mode)
     assert len(re.findall(r"\(\d+\) (?:Object)?HashAggregate", plan)) >= 4, plan[:1200]
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert not [n for n in PYTHON_STAGE_NODES if n in plan]
     assert "CartesianProduct" not in plan
     assert re.search(r"partial_count", plan), plan[:1200]
 
@@ -551,7 +552,7 @@ def test_mp4_demux_map_only(spark, sf_dir):
     rows."""
     plan = plan_of(spark, "multimodal_mp4_samples", sf_dir)
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan[:800]
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_mp4_multitrack_and_audio_decode_map_only(spark, sf_dir):
@@ -562,7 +563,7 @@ def test_mp4_multitrack_and_audio_decode_map_only(spark, sf_dir):
               "multimodal_mp3_frames"):
         plan = plan_of(spark, q, sf_dir)
         assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, (q, plan[:800])
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan, q
 
 
 def test_sample_reservoir_is_topk_not_global_sort(spark, sf_dir):
@@ -582,7 +583,7 @@ def test_video_curation_single_shuffle(spark, sf_dir):
     over the media rows."""
     plan = plan_of(spark, "pipeline_video_curation", sf_dir)
     assert len(non_fanout_exchanges(plan)) == 1, plan[:900]
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
     # partial aggregation runs map-side, before the exchange
     assert "partial" in plan.lower()
@@ -636,7 +637,7 @@ def test_r13_codec_queries_map_only(spark, sf_dir):
     ):
         plan = plan_of(spark, q, sf_dir)
         assert not non_fanout_exchanges(plan), (q, plan[:800])
-        assert "MapInPandas" in plan, q
+        assert "MapInArrow" in plan, q
 
 
 def test_caption_curation_single_shuffle(spark, sf_dir):
@@ -644,7 +645,7 @@ def test_caption_curation_single_shuffle(spark, sf_dir):
     stage) + ONE aggregation shuffle — no joins, no second media pass."""
     plan = plan_of(spark, "pipeline_caption_curation", sf_dir)
     assert len(non_fanout_exchanges(plan)) == 1, plan[:800]
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_url_canonicalize_jvm_only_single_shuffle(spark, sf_dir):
@@ -652,7 +653,7 @@ def test_url_canonicalize_jvm_only_single_shuffle(spark, sf_dir):
     plan must carry NO Python evaluator (whole-stage codegen end to
     end) and exactly one aggregation Exchange."""
     plan = plan_of(spark, "text_url_canonicalize", sf_dir)
-    for bad in ("BatchEvalPython", "MapInPandas", "ArrowEvalPython"):
+    for bad in PYTHON_STAGE_NODES:
         assert bad not in plan, (bad, plan[:800])
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan[:800]
     # codegen fusion markers only materialize in the executed plan;
@@ -664,7 +665,7 @@ def test_pii_redact_jvm_only_map_stage(spark, sf_dir):
     NO Python evaluator in the plan and NO Exchange — a 100 TB corpus
     scrubs in one codegen map stage (the url_canonicalize posture)."""
     plan = plan_of(spark, "text_pii_redact_extended", sf_dir)
-    for bad in ("BatchEvalPython", "MapInPandas", "ArrowEvalPython"):
+    for bad in PYTHON_STAGE_NODES:
         assert bad not in plan, (bad, plan[:800])
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan[:800]
 
@@ -673,7 +674,7 @@ def test_markdown_extract_jvm_only_map_stage(spark, sf_dir):
     """The Markdown extractor is Column expressions only: NO Python
     evaluator and NO Exchange in the plan (the url/pii posture)."""
     plan = plan_of(spark, "text_markdown_extract", sf_dir)
-    for bad in ("BatchEvalPython", "MapInPandas", "ArrowEvalPython"):
+    for bad in PYTHON_STAGE_NODES:
         assert bad not in plan, (bad, plan[:800])
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan[:800]
 
@@ -698,7 +699,7 @@ def test_uri_parse_jvm_only_map_stage(spark, sf_dir):
     only: NO Python evaluator and NO Exchange — one codegen map stage
     (the url_canonicalize posture)."""
     plan = plan_of(spark, "fn_uri_parse", sf_dir)
-    for bad in ("BatchEvalPython", "MapInPandas", "ArrowEvalPython"):
+    for bad in PYTHON_STAGE_NODES:
         assert bad not in plan, (bad, plan[:800])
     assert "Exchange" not in plan, plan[:800]
 
@@ -707,5 +708,5 @@ def test_fwf_parse_jvm_only(spark, sf_dir):
     """The fixed-width slicer (substring/trim/try_cast) must carry NO
     Python evaluator — a 100 TB mainframe drop parses in codegen."""
     plan = plan_of(spark, "scan_fwf_checked", sf_dir)
-    for bad in ("BatchEvalPython", "MapInPandas", "ArrowEvalPython"):
+    for bad in PYTHON_STAGE_NODES:
         assert bad not in plan, (bad, plan[:800])

@@ -1,5 +1,6 @@
 """Sitemap parser pins: root routing, both kinds, malformed inputs."""
 
+from conftest import PYTHON_STAGE_NODES
 from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.functions.sitemap import parse_sitemap
@@ -58,5 +59,5 @@ def test_jvm_only_plan(spark):
     expression, so the plan must not contain any Python eval node."""
     df = spark.createDataFrame([("<urlset><url><loc>x</loc></url></urlset>",)], "x string")
     plan = df.select(parse_sitemap(F.col("x")).alias("e"))._jdf.queryExecution().executedPlan().toString()
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in PYTHON_STAGE_NODES:
         assert marker not in plan

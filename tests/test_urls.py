@@ -6,6 +6,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from conftest import PYTHON_STAGE_NODES
 from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.functions.urls import canonicalize_url
@@ -38,9 +39,8 @@ def test_plan_is_jvm_only(spark):
     plan = df.select(
         canonicalize_url(F.col("url"))
     )._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "ArrowEvalPython" not in plan
+    for node in PYTHON_STAGE_NODES:
+        assert node not in plan
 
 
 def test_idempotent(spark):
